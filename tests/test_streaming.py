@@ -281,60 +281,155 @@ def test_streaming_kslack_equals_batch_replay(spark, tmp_path_factory):
     assert got == expect and len(expect) > 50  # most tuples released
 
 
-def test_streaming_kslack_multichunk_group(spark, tmp_path_factory):
-    """A group larger than arrow.maxRecordsPerBatch reaches the state
-    function as MULTIPLE pandas chunks with no cross-chunk order guarantee;
-    the replay must sort the CONCATENATED micro-batch by arrival, not each
-    chunk independently. Forced here by shrinking maxRecordsPerBatch to 8
-    and scrambling one key's 60-row batch so chunk-local order != global
-    arrival order."""
-    import random
-    import time as _time
+MC_SENT = 10_000_000_000
+MC_SCHEMA = "key long, ts_us long, arrival long, value long, eos boolean"
 
+
+def _mc_kslack(spark, stream, batch):
     from windflow_spark.operators.kslack import kslack_reorder
     from windflow_spark.streaming import streaming_kslack
 
-    SENT = 10_000_000_000
+    proj = lambda r: (r.key, r.ts_us, r.arrival, r.value, r.emit_seq)  # noqa: E731
+    live = F.col("ts_us") < MC_SENT
+    expect = [proj(r) for r in kslack_reorder(batch, ["key"], "ts_us", "arrival").filter(live).collect()]
+    out = streaming_kslack(stream, ["key"], "ts_us", "arrival", ["value"]).filter(live)
+    return expect, out, proj
+
+
+def _mc_rolling_reduce(spark, stream, batch):
+    from windflow_spark.streaming import streaming_rolling_reduce
+
+    proj = lambda r: (r.key, r.ts_us, r.running_cnt, float(r.running_sum))  # noqa: E731
+    expect = [
+        proj(r)
+        for r in rolling_reduce(
+            batch, ["key"], ["ts_us"],
+            {"running_cnt": F.count(F.lit(1)), "running_sum": F.sum("value")},
+        ).collect()
+    ]
+    out = streaming_rolling_reduce(
+        stream, ["key"], "ts_us", "value",
+        "key long, ts_us long, value double, running_cnt long, running_sum double",
+    )
+    return expect, out, proj
+
+
+_MC_AGGS = lambda: [F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("sv")]  # noqa: E731
+
+
+def _mc_tumbling_cb(spark, stream, batch):
+    expect = [
+        (r.key, r.wid, r.cnt, float(r.sv))
+        for r in tumbling_window_cb(batch, ["key"], ["ts_us"], 7, _MC_AGGS()).collect()
+    ]
+    out = streaming_tumbling_window_cb(stream, ["key"], "ts_us", "value", 7, eos_col="eos")
+    return expect, out, lambda r: (r.key, r.wid, r.cnt, float(r.sum_value))
+
+
+def _mc_sliding_cb(spark, stream, batch):
+    from windflow_spark.operators.windows import sliding_window_cb
+    from windflow_spark.streaming import streaming_sliding_window_cb
+
+    expect = [
+        (r.key, r.wid, r.cnt, float(r.sv))
+        for r in sliding_window_cb(batch, ["key"], ["ts_us"], 7, 3, _MC_AGGS()).collect()
+    ]
+    out = streaming_sliding_window_cb(stream, ["key"], "ts_us", "value", 7, 3, eos_col="eos")
+    return expect, out, lambda r: (r.key, r.wid, r.cnt, float(r.sum_value))
+
+
+def _mc_p_reduce(spark, stream, batch):
+    from pyspark.sql import Window as W
+
+    from windflow_spark.streaming import p_reduce
+
+    def fold(row, st):
+        st[0] = max(st[0], row["value"])
+        st[1] += 1
+
+    proj = lambda r: (r.key, r.ts_us, r.mx, r.cnt)  # noqa: E731
+    w = W.partitionBy("key").orderBy("ts_us")
+    expect = [
+        proj(r)
+        for r in batch.select(
+            "key", "ts_us", F.max("value").over(w).alias("mx"),
+            F.count(F.lit(1)).over(w).alias("cnt"),
+        ).collect()
+    ]
+    out = p_reduce(
+        stream, ["key"], "ts_us", fold,
+        "key long, ts_us long, mx long, cnt long", "mx long, cnt long", (0, 0),
+    )
+    return expect, out, proj
+
+
+@pytest.mark.parametrize(
+    ("case", "distinct_ts", "min_rows"),
+    [
+        pytest.param(_mc_kslack, False, 30, id="kslack"),
+        pytest.param(_mc_rolling_reduce, True, 50, id="rolling_reduce"),
+        pytest.param(_mc_tumbling_cb, True, 8, id="tumbling_cb"),
+        pytest.param(_mc_sliding_cb, True, 15, id="sliding_cb"),
+        pytest.param(_mc_p_reduce, True, 50, id="p_reduce"),
+    ],
+)
+def test_streaming_multichunk_group(spark, tmp_path_factory, case, distinct_ts, min_rows):
+    """A group larger than arrow.maxRecordsPerBatch reaches the state
+    function as MULTIPLE pandas chunks with no cross-chunk order guarantee;
+    the fold must order the CONCATENATED micro-batch, not each chunk
+    independently. Forced here by shrinking maxRecordsPerBatch to 8 and
+    shuffling one key's 60 rows into a single file, so chunk-local order
+    != the operator's order; the streaming form must equal its batch form.
+    The EOS punctuation of the CB windows sits in the same shuffled file —
+    it must still count as arriving after every data row. K-slack's two
+    drain punctuations come in a second, later micro-batch (see
+    streaming_kslack). K-slack orders by (ts, arrival), so it keeps the
+    data's equal timestamps; the other cases order by ts alone, where the
+    batch forms leave ties unordered (RANGE-frame peers, count windows),
+    so they get distinct timestamps."""
+    import random
+    import time as _time
+
     rng = random.Random(42)
-    arrivals = []
+    data = []
     t = 0
     for i in range(60):
         t += rng.randint(1, 5) * 1_000_000
-        arrivals.append(t + rng.choice([0, -2_000_000, -4_500_000, 1_000_000]))
-    rows = [(0, max(ts, 0), i, i * 10) for i, ts in enumerate(arrivals)]
-    # TWO increasing punctuations: one only raises the release limit to
-    # min(recent ts) (K grows with it); the second drains the full buffer,
-    # matching the batch form's EOS flush (see streaming_kslack docstring)
-    punct = [(0, SENT, 1_000, -1), (0, 2 * SENT, 1_001, -1)]
-    schema = "key long, ts_us long, arrival long, value long"
-    full = spark.createDataFrame(rows + punct, schema)
-    expect = sorted(
-        (r.key, r.ts_us, r.arrival, r.value, r.emit_seq)
-        for r in kslack_reorder(full, ["key"], "ts_us", "arrival").collect()
-        if r.ts_us < SENT
-    )
+        ts = max(t + rng.choice([0, -2_000_000, -4_500_000, 1_000_000]), 0)
+        data.append((0, ts + i if distinct_ts else ts, i, i * 10, False))
+    eos = [(0, max(r[1] for r in data), 60, None, True)]
+    punct = [(0, MC_SENT, 1_000, -1, False), (0, 2 * MC_SENT, 1_001, -1, False)]
+    with_eos = case in (_mc_tumbling_cb, _mc_sliding_cb)
+    first = data + eos if with_eos else list(data)
+    rest = punct if case is _mc_kslack else []
+    batch = spark.createDataFrame(data + rest, MC_SCHEMA)
 
-    scrambled = list(rows)
-    rng.shuffle(scrambled)  # chunk-local arrival order != global order
-    path = str(tmp_path_factory.mktemp("kslack_chunk_src"))
-    spark.createDataFrame(scrambled, schema).coalesce(1).write.mode("append").parquet(path)
-    _time.sleep(1.1)
-    spark.createDataFrame(punct, schema).coalesce(1).write.mode("append").parquet(path)
+    rng.shuffle(first)  # chunk-local order != the operator's order
+    path = str(tmp_path_factory.mktemp("multichunk_src"))
+    for part in (first, rest):
+        if part:
+            spark.createDataFrame(part, MC_SCHEMA).coalesce(1).write.mode("append").parquet(path)
+            _time.sleep(1.1)
 
     prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "8")
     try:
-        stream = file_stream(spark, path, full.schema, max_files_per_trigger=1)
-        out = streaming_kslack(stream, ["key"], "ts_us", "arrival", ["value"])
+        stream = file_stream(spark, path, batch.schema, max_files_per_trigger=1)
+        expect, out, proj = case(spark, stream, batch)
         name, _ = to_memory_sink(out, output_mode="append")
-        got = sorted(
-            (r.key, r.ts_us, r.arrival, r.value, r.emit_seq)
-            for r in spark.table(name).collect()
-            if r.ts_us < SENT
-        )
+        got = sorted(proj(r) for r in spark.table(name).collect())
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
-    assert got == expect and len(expect) > 30
+    assert got == sorted(expect) and len(expect) > min_rows
+
+
+def test_keyed_fold_output_field_names():
+    """``_keyed_fold`` names its output frame from the DDL schema; commas
+    nested in type parameters do not split fields."""
+    from windflow_spark.streaming.ops import _field_names
+
+    ddl = "a long, m map<string,long>, d decimal(10,2), `b` array<struct<x:int,y:int>>"
+    assert _field_names(ddl) == ["a", "m", "d", "b"]
 
 
 def test_streaming_exact_dedup_equals_batch(spark, stream_fixture):

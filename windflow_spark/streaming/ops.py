@@ -6,12 +6,30 @@ wf/watermark_collector.hpp:64-79); Spark's is global max(event_time) − delay
 per trigger. For keyed windowed aggregates the observable difference is only
 WHEN results fire, not WHAT fires — withWatermark(delay) plays the role of
 withLateness(µs) (reference wf/builders.hpp:743-781).
+
+Keyed folds: every per-key stateful operator here, and the P_* family in
+persistent.py, is one ``step`` function run by ``_keyed_fold``, the only
+code that speaks applyInPandasWithState's GroupState protocol. Per key and
+micro-batch it
+- concatenates ALL of the key's Arrow chunks (a group larger than
+  arrow.maxRecordsPerBatch arrives as several, in no guaranteed order);
+- splits off the ``eos_col`` punctuation rows, so a punctuation counts as
+  arriving after every data row of its batch, and reports them as
+  ``eos_seen``;
+- stable-sorts the data rows on the operator's order columns (``rows``
+  always has a fresh RangeIndex);
+- calls ``step(key, state, rows, eos_seen) -> (out_rows, new_state)`` with
+  the stored state tuple, or the operator's initial one;
+- stores ``new_state``, or removes the key's state when it is ``None``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+import bisect
+from collections.abc import Callable, Iterator, Sequence
+from typing import Any
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -35,6 +53,66 @@ def _round_half_up(x: float, nd: int = 6) -> float:
 
 def _dur(us: int) -> str:
     return f"{us} microseconds"
+
+
+def _field_names(ddl: str) -> list[str]:
+    """Field names of a DDL schema string. Commas nested in ``<>`` or
+    ``()`` (``map<string,long>``, ``decimal(10,2)``) do not split fields."""
+    names, depth, start = [], 0, 0
+    for i, ch in enumerate(ddl + ","):
+        if ch in "<(":
+            depth += 1
+        elif ch in ">)":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            names.append(ddl[start:i].replace(":", " ").split()[0].strip("`"))
+            start = i + 1
+    return names
+
+
+def _keyed_fold(
+    df: DataFrame,
+    key_cols: Sequence[str],
+    output_schema: str,
+    state_schema: str,
+    initial: tuple,
+    step: Callable[..., tuple[Any, tuple | None]],
+    order_cols: Sequence[str] = (),
+    eos_col: str | None = None,
+    watermark: bool = False,
+) -> DataFrame:
+    """Run ``step`` once per key and micro-batch under the contract in the
+    module docstring. ``out_rows`` is a DataFrame, or a list of tuples (or
+    dicts) laid out as ``output_schema``. With ``watermark`` the step gets
+    the operator's current event-time watermark in µs as a fifth argument.
+    """
+    order = list(order_cols)
+    out_cols = _field_names(output_schema)
+
+    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+        chunks = list(pdfs)
+        rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+        eos_seen = False
+        if eos_col is not None:
+            flags = rows[eos_col].fillna(False).to_numpy(dtype=bool)
+            eos_seen = bool(flags.any())
+            if eos_seen:
+                rows = rows[~flags].reset_index(drop=True)
+        if order:
+            rows = rows.sort_values(order, kind="stable", ignore_index=True)
+        args = (key, state.get if state.exists else initial, rows, eos_seen)
+        if watermark:
+            args += (state.getCurrentWatermarkMs() * 1000,)
+        out, new_state = step(*args)
+        if new_state is None:
+            state.remove()
+        else:
+            state.update(tuple(new_state))
+        yield out if isinstance(out, pd.DataFrame) else pd.DataFrame(out, columns=out_cols)
+
+    return df.groupBy(*key_cols).applyInPandasWithState(
+        fold, output_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    )
 
 
 def streaming_tumbling_window_tb(
@@ -363,28 +441,20 @@ def streaming_rolling_reduce(
         ", ".join(f"{k} long" for k in key_list)
         + f", {ts_col} timestamp, {value_col} double, running_cnt long, running_sum double"
     )
-    state_schema = "cnt long, s double"
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def step(key, st, rows, eos_seen):
+        cnt, s = st
+        vals = rows[value_col].to_numpy(dtype=np.float64)
+        res = rows[key_list + [ts_col, value_col]].copy()
+        # vectorized running state: cumsum over the batch + carry-in
+        res["running_cnt"] = cnt + np.arange(1, len(vals) + 1)
+        run = s + np.cumsum(vals)
+        res["running_sum"] = run
+        return res, (cnt + len(vals), float(run[-1]) if len(vals) else s)
 
-        (cnt, s) = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col)
-            vals = pdf[value_col].to_numpy(dtype=np.float64)
-            res = pdf[key_list + [ts_col, value_col]].copy()
-            # vectorized running state: cumsum over the batch + carry-in
-            res["running_cnt"] = cnt + np.arange(1, len(vals) + 1)
-            run = s + np.cumsum(vals)
-            res["running_sum"] = run
-            if len(vals):
-                cnt += len(vals)
-                s = float(run[-1])
-            yield res
-        state.update((cnt, s))
-
-    return df.groupBy(*key_list).applyInPandasWithState(
-        fold, output_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        df, key_list, output_schema, "cnt long, s double", (0, 0.0), step,
+        order_cols=[ts_col],
     )
 
 
@@ -418,59 +488,43 @@ def streaming_tumbling_window_cb(
     output_schema = (
         ", ".join(f"{k} long" for k in key_list) + ", wid long, cnt long, sum_value double"
     )
-    state_schema = "next_id long, wid long, wcnt long, wsum double"
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        next_id, wid, wcnt, wsum = state.get if state.exists else (0, 0, 0, 0.0)
+    def step(key, st, rows, eos_seen):
+        next_id, wid, wcnt, wsum = st
         fired: list[tuple] = []
-        for pdf in pdfs:
-            if eos_col is not None:
-                # punctuations sort AFTER all data rows of the batch
-                pdf = pdf.sort_values([eos_col, ts_col])
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                vals = pdf[value_col].to_numpy(dtype=np.float64)[~flags]
+        vals = rows[value_col].to_numpy(dtype=np.float64)
+        n = len(vals)
+        if n:
+            # Per-key ids are CONSECUTIVE from next_id, so each window's
+            # rows form one contiguous span: segment-sum via reduceat —
+            # no per-row Python. The carry-in partial always merges into
+            # the first span (state invariant: wid == next_id // length).
+            wids = (next_id + np.arange(n)) // length
+            starts = np.nonzero(np.r_[True, wids[1:] != wids[:-1]])[0]
+            sums = np.add.reduceat(vals, starts)
+            counts = np.diff(np.r_[starts, n])
+            uw = wids[starts]
+            if wcnt > 0:
+                sums[0] += wsum
+                counts[0] += wcnt
+            full = counts == length
+            for w, c, s_ in zip(uw[full], counts[full], sums[full]):
+                fired.append(key + (int(w), int(c), float(s_)))
+            if full[-1]:
+                wcnt, wsum = 0, 0.0
             else:
-                pdf = pdf.sort_values(ts_col)
-                eos_seen = False
-                vals = pdf[value_col].to_numpy(dtype=np.float64)
-            n = len(vals)
-            if n:
-                # Per-key ids are CONSECUTIVE from next_id, so each window's
-                # rows form one contiguous span: segment-sum via reduceat —
-                # no per-row Python. The carry-in partial always merges into
-                # the first span (state invariant: wid == next_id // length).
-                wids = (next_id + np.arange(n)) // length
-                starts = np.nonzero(np.r_[True, wids[1:] != wids[:-1]])[0]
-                sums = np.add.reduceat(vals, starts)
-                counts = np.diff(np.r_[starts, n])
-                uw = wids[starts]
-                if wcnt > 0:
-                    sums[0] += wsum
-                    counts[0] += wcnt
-                full = counts == length
-                for w, c, s_ in zip(uw[full], counts[full], sums[full]):
-                    fired.append(key + (int(w), int(c), float(s_)))
-                if full[-1]:
-                    wcnt, wsum = 0, 0.0
-                else:
-                    wcnt, wsum = int(counts[-1]), float(sums[-1])
-                next_id += n
-                wid = next_id // length
-            if eos_seen:
-                if wcnt > 0:  # flush the open partial window at EOS
-                    fired.append(key + (wid, wcnt, wsum))
-                next_id, wid, wcnt, wsum = 0, 0, 0, 0.0
-        state.update((next_id, wid, wcnt, wsum))
-        cols = key_list + ["wid", "cnt", "sum_value"]
-        yield pd.DataFrame(fired, columns=cols) if fired else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+                wcnt, wsum = int(counts[-1]), float(sums[-1])
+            next_id += n
+            wid = next_id // length
+        if eos_seen:
+            if wcnt > 0:  # flush the open partial window at EOS
+                fired.append(key + (wid, wcnt, wsum))
+            next_id, wid, wcnt, wsum = 0, 0, 0, 0.0
+        return fired, (next_id, wid, wcnt, wsum)
 
-    return df.groupBy(*key_list).applyInPandasWithState(
-        fold, output_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        df, key_list, output_schema, "next_id long, wid long, wcnt long, wsum double",
+        (0, 0, 0, 0.0), step, order_cols=[ts_col], eos_col=eos_col,
     )
 
 
@@ -497,82 +551,55 @@ def streaming_sliding_window_cb(
 
     Output: (key..., wid, cnt, sum_value) per FIRED window.
     """
-    import numpy as np
-
     key_list = list(key_cols)
     output_schema = (
         ", ".join(f"{k} long" for k in key_list) + ", wid long, cnt long, sum_value double"
     )
     state_schema = "next_id long, wids array<long>, cnts array<long>, sums array<double>"
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            next_id, wids, cnts, sums = state.get
-            open_w = {int(w): (int(c), float(s)) for w, c, s in zip(wids, cnts, sums)}
-        else:
-            next_id, open_w = 0, {}
+    def step(key, st, rows, eos_seen):
+        next_id, wids, cnts, sums = st
+        open_w = {int(w): (int(c), float(s)) for w, c, s in zip(wids, cnts, sums)}
         fired: list[tuple] = []
-
-        def flush_all() -> None:
-            nonlocal next_id, open_w
-            for w in sorted(open_w):
-                c, s = open_w[w]
-                if c > 0:
-                    fired.append(key + (w, c, s))
+        vals = rows[value_col].to_numpy(dtype=np.float64)
+        n = len(vals)
+        if n:
+            end = next_id + n
+            pre = np.concatenate([[0.0], np.cumsum(vals)])
+            # windows still open (w*slide + length > next_id) or newly
+            # started in this batch (w*slide <= end-1), w >= 0
+            w_lo = max(0, -(-(next_id - length + 1) // slide))
+            w_hi = (end - 1) // slide
+            ws = np.arange(w_lo, w_hi + 1)
+            a = ws * slide
+            b = a + length
+            lo = np.clip(a - next_id, 0, n).astype(np.int64)
+            hi = np.clip(b - next_id, 0, n).astype(np.int64)
+            part_c = (hi - lo).astype(np.int64)
+            part_s = pre[hi] - pre[lo]
+            for w, bb, pc, ps in zip(ws, b, part_c, part_s):
+                c0, s0 = open_w.pop(int(w), (0, 0.0))
+                c, s = c0 + int(pc), s0 + float(ps)
+                if bb <= end:  # last id of the window arrived → fire
+                    if c > 0:
+                        fired.append(key + (int(w), c, s))
+                elif c > 0:
+                    open_w[int(w)] = (c, s)
+            next_id = end
+        if eos_seen:  # flush every open partial in wid order
+            fired += [key + (w, *open_w[w]) for w in sorted(open_w) if open_w[w][0] > 0]
             next_id, open_w = 0, {}
-
-        for pdf in pdfs:
-            if eos_col is not None:
-                pdf = pdf.sort_values([eos_col, ts_col])
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                vals = pdf[value_col].to_numpy(dtype=np.float64)[~flags]
-            else:
-                pdf = pdf.sort_values(ts_col)
-                eos_seen = False
-                vals = pdf[value_col].to_numpy(dtype=np.float64)
-            n = len(vals)
-            if n:
-                end = next_id + n
-                pre = np.concatenate([[0.0], np.cumsum(vals)])
-                # windows still open (w*slide + length > next_id) or newly
-                # started in this batch (w*slide <= end-1), w >= 0
-                w_lo = max(0, -(-(next_id - length + 1) // slide))
-                w_hi = (end - 1) // slide
-                ws = np.arange(w_lo, w_hi + 1)
-                a = ws * slide
-                b = a + length
-                lo = np.clip(a - next_id, 0, n).astype(np.int64)
-                hi = np.clip(b - next_id, 0, n).astype(np.int64)
-                part_c = (hi - lo).astype(np.int64)
-                part_s = pre[hi] - pre[lo]
-                for w, bb, pc, ps in zip(ws, b, part_c, part_s):
-                    c0, s0 = open_w.pop(int(w), (0, 0.0))
-                    c, s = c0 + int(pc), s0 + float(ps)
-                    if bb <= end:  # last id of the window arrived → fire
-                        if c > 0:
-                            fired.append(key + (int(w), c, s))
-                    elif c > 0:
-                        open_w[int(w)] = (c, s)
-                next_id = end
-            if eos_seen:
-                flush_all()
         keys_sorted = sorted(open_w)
-        state.update(
-            (
-                next_id,
-                [int(w) for w in keys_sorted],
-                [open_w[w][0] for w in keys_sorted],
-                [open_w[w][1] for w in keys_sorted],
-            )
-        )
-        cols = key_list + ["wid", "cnt", "sum_value"]
-        yield pd.DataFrame(fired, columns=cols) if fired else pd.DataFrame(
-            {c: [] for c in cols}
+        return fired, (
+            next_id,
+            keys_sorted,
+            [open_w[w][0] for w in keys_sorted],
+            [open_w[w][1] for w in keys_sorted],
         )
 
-    return df.groupBy(*key_list).applyInPandasWithState(
-        fold, output_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        df, key_list, output_schema, state_schema, (0, [], [], []), step,
+        order_cols=[ts_col], eos_col=eos_col,
     )
 
 
@@ -715,8 +742,6 @@ def streaming_kslack(
     min(recent ts); punct₂ > punct₁ then lifts the limit past every real
     timestamp and releases the rest).
     """
-    import bisect
-
     key_list = list(key_cols)
     val_list = list(value_cols)
     types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
@@ -730,17 +755,13 @@ def streaming_kslack(
         + [f"buf_{c} array<{types[c]}>" for c in val_list]
     )
 
-    def reorder(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            (tcurr, k, last_ts, emitted, ts_vect, b_ts, b_arr, *b_vals) = state.get
-            ts_vect = list(ts_vect)
-            buf = [
-                (b_ts[i], b_arr[i], [bv[i] for bv in b_vals])
-                for i in range(len(b_ts))
-            ]
-        else:
-            tcurr = k = last_ts = emitted = 0
-            ts_vect, buf = [], []
+    def step(key, st, rows, eos_seen):
+        tcurr, k, last_ts, emitted, ts_vect, b_ts, b_arr, *b_vals = st
+        ts_vect = list(ts_vect)
+        buf = [
+            (b_ts[i], b_arr[i], [bv[i] for bv in b_vals])
+            for i in range(len(b_ts))
+        ]
         released: list[list] = []
 
         def extract() -> None:
@@ -755,48 +776,30 @@ def streaming_kslack(
                 i += 1
             del buf[:i]
 
-        keys = list(key) if isinstance(key, tuple) else [key]
-        # applyInPandasWithState delivers a large group as MULTIPLE Arrow
-        # chunks (arrow.maxRecordsPerBatch, default 10k) with no cross-chunk
-        # order guarantee — concatenate first so the arrival_col sort (the
-        # documented replay order) spans the whole micro-batch, not each
-        # chunk independently.
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        merged = (
-            pd.concat(chunks, ignore_index=True).sort_values(arrival_col)
-            if chunks
-            else None
-        )
-        if merged is not None:
-            for row in merged.to_dict("records"):
-                ts = int(row[ts_col])
-                ts_vect.append(ts)
-                entry = (ts, int(row[arrival_col]), [row[c] for c in val_list])
-                bisect.insort(buf, entry, key=lambda e: (e[0], e[1]))
-                if ts > tcurr:
-                    tcurr = ts
-                    k = max(k, max(tcurr - t for t in ts_vect))
-                    ts_vect.clear()
-                    extract()
-        out = pd.DataFrame(
-            [
-                keys + [ts, arr] + vals + [emitted + i]
-                for i, (ts, arr, vals) in enumerate(released)
-            ],
-            columns=key_list + [ts_col, arrival_col] + val_list + [emit_col],
-        )
-        emitted += len(released)
-        state.update((
-            tcurr, k, last_ts, emitted, ts_vect,
+        for row in rows.to_dict("records"):
+            ts = int(row[ts_col])
+            ts_vect.append(ts)
+            entry = (ts, int(row[arrival_col]), [row[c] for c in val_list])
+            bisect.insort(buf, entry, key=lambda e: (e[0], e[1]))
+            if ts > tcurr:
+                tcurr = ts
+                k = max(k, max(tcurr - t for t in ts_vect))
+                ts_vect.clear()
+                extract()
+        out = [
+            list(key) + [ts, arr] + vals + [emitted + i]
+            for i, (ts, arr, vals) in enumerate(released)
+        ]
+        return out, (
+            tcurr, k, last_ts, emitted + len(released), ts_vect,
             [e[0] for e in buf], [e[1] for e in buf],
             *[[e[2][j] for e in buf] for j in range(len(val_list))],
-        ))
-        yield out if len(out) else pd.DataFrame(
-            {c: [] for c in key_list + [ts_col, arrival_col] + val_list + [emit_col]}
         )
 
-    return df.groupBy(*key_list).applyInPandasWithState(
-        reorder, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    initial = (0, 0, 0, 0, [], [], [], *([[]] * len(val_list)))
+    return _keyed_fold(
+        df, key_list, out_schema, state_schema, initial, step,
+        order_cols=[arrival_col],
     )
 
 
@@ -830,9 +833,8 @@ def streaming_rolling_zscore(
     """
     import math
 
-    key_list = list(key_cols)
     out_schema = (
-        ", ".join(f"{k} long" for k in key_list)
+        ", ".join(f"{k} long" for k in key_cols)
         + ", bucket_start long, cnt long, zscore double"
     )
     state_schema = "cur_b long, cur_c long, hist_b array<long>, hist_c array<long>"
@@ -849,14 +851,9 @@ def streaming_rolling_zscore(
         z = (c - mean) / math.sqrt(var)
         return math.copysign(math.floor(abs(z) * 100 + 0.5) / 100, z)
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        if state.exists:
-            cur_b, cur_c, hist_b, hist_c = state.get
-            hist = list(zip(hist_b, hist_c))
-        else:
-            cur_b, cur_c, hist = -1, 0, []
+    def step(key, st, rows, eos_seen):
+        cur_b, cur_c, hist_b, hist_c = st
+        hist = list(zip(hist_b, hist_c))
         out: list[tuple] = []
 
         def close_current(b_next: int | None) -> None:
@@ -869,47 +866,23 @@ def streaming_rolling_zscore(
             hist = [(bi, ci) for bi, ci in hist if bi >= floor_b]
             cur_b, cur_c = -1, 0
 
-        # Concat ALL chunks before sorting (streaming_funnel's pattern): a
-        # key whose micro-batch rows span multiple Arrow chunks would
-        # otherwise see cross-chunk timestamp inversions and drop
-        # earlier-bucket rows as late.
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
-        eos_seen = False
-        if pdf is not None:
-            if eos_col is not None:
-                pdf = pdf.sort_values([eos_col, ts_col])
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                ts = pdf[ts_col].to_numpy(dtype=np.int64)[~flags]
-            else:
-                pdf = pdf.sort_values(ts_col)
-                ts = pdf[ts_col].to_numpy(dtype=np.int64)
-            if len(ts):
-                ub, uc = np.unique(ts // bucket_us, return_counts=True)
-                for b, c in zip(ub.tolist(), uc.tolist()):
-                    if b == cur_b:
-                        cur_c += c
-                    elif b > cur_b:
-                        close_current(b)
-                        cur_b, cur_c = b, c
-                    # b < cur_b: late row for a scored bucket — dropped
+        ts = rows[ts_col].to_numpy(dtype=np.int64)
+        ub, uc = np.unique(ts // bucket_us, return_counts=True)
+        for b, c in zip(ub.tolist(), uc.tolist()):
+            if b == cur_b:
+                cur_c += c
+            elif b > cur_b:
+                close_current(b)
+                cur_b, cur_c = b, c
+            # b < cur_b: late row for a scored bucket — dropped
         if eos_seen:
             close_current(None)
-            state.remove()  # constant-state op: no empty entry after EOS
-        else:
-            state.update(
-                (cur_b, cur_c, [b for b, _ in hist], [c for _, c in hist])
-            )
-        cols = key_list + ["bucket_start", "cnt", "zscore"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+            return out, None  # constant-state op: no empty entry after EOS
+        return out, (cur_b, cur_c, [b for b, _ in hist], [c for _, c in hist])
 
-    return df.groupBy(*key_cols).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        df, key_cols, out_schema, state_schema, (-1, 0, [], []), step,
+        eos_col=eos_col,
     )
 
 
@@ -953,33 +926,14 @@ def streaming_segment_dedup(
         ).alias("seg_idx", "seg"),
     ).withColumn("_h", F.md5("seg"))
 
-    out_schema = f"{id_col} long, seg_idx long, seg string"
-    state_schema = "emitted boolean"
+    def step(key, st, rows, eos_seen):
+        if st[0]:
+            return [], (True,)
+        return [tuple(rows.iloc[0][[id_col, "seg_idx", "seg"]])], (True,)
 
-    def keep_first(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        emitted = state.get[0] if state.exists else False
-        rows = []
-        if not emitted:
-            best = None
-            for pdf in pdfs:
-                for r in pdf.itertuples(index=False):
-                    cand = (getattr(r, id_col), r.seg_idx, r.seg)
-                    if best is None or (cand[0], cand[1]) < (best[0], best[1]):
-                        best = cand
-            if best is not None:
-                rows.append(best)
-                emitted = True
-        else:
-            for _ in pdfs:  # drain
-                pass
-        state.update((emitted,))
-        cols = [id_col, "seg_idx", "seg"]
-        yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
-            {c: [] for c in cols}
-        )
-
-    return segs.groupBy("_h").applyInPandasWithState(
-        keep_first, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        segs, ["_h"], f"{id_col} long, seg_idx long, seg string", "emitted boolean",
+        (False,), step, order_cols=[id_col, "seg_idx"],
     )
 
 
@@ -1017,35 +971,20 @@ def streaming_heavy_hitters(
         F.col(col), is_eos.alias("_eos"), F.explode(bkts).alias("_bkt")
     )
 
-    out_schema = f"{col} string, est long"
-    state_schema = "toks array<string>, cnts array<long>"
+    def step(key, st, rows, eos_seen):
+        acc = dict(zip(*st))
+        for t, c in rows[col].value_counts().items():
+            acc[t] = acc.get(t, 0) + int(c)
+        if len(acc) > capacity:
+            sub = sorted(acc.values(), reverse=True)[capacity]
+            acc = {t: v - sub for t, v in acc.items() if v - sub > 0}
+        if eos_seen:
+            return list(acc.items()), None  # constant-state op: no entry after EOS
+        return [], (list(acc), list(acc.values()))
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            toks, cnts = state.get
-            acc = dict(zip(toks, cnts))
-        else:
-            acc = {}
-        eos = False
-        for pdf in pdfs:
-            for t, c in pdf.loc[~pdf["_eos"], col].value_counts().items():
-                acc[t] = acc.get(t, 0) + int(c)
-            if len(acc) > capacity:
-                cuts = sorted(acc.values(), reverse=True)
-                sub = cuts[capacity]
-                acc = {t: v - sub for t, v in acc.items() if v - sub > 0}
-            eos = eos or bool(pdf["_eos"].any())
-        if eos:
-            state.remove()  # constant-state op: no empty entry after EOS
-            yield pd.DataFrame(
-                {col: list(acc.keys()), "est": list(acc.values())}
-            ) if acc else pd.DataFrame({col: [], "est": []})
-        else:
-            state.update((list(acc.keys()), list(acc.values())))
-            yield pd.DataFrame({col: [], "est": []})
-
-    return d.groupBy("_bkt").applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        d, ["_bkt"], f"{col} string, est long", "toks array<string>, cnts array<long>",
+        ([], []), step, eos_col="_eos",
     )
 
 
@@ -1089,33 +1028,18 @@ def streaming_cms(
         "_eos", F.col("_h.r").alias("r"), F.col("_h.idx").alias("idx")
     )
 
-    out_schema = "r int, idx long, counter long"
-    state_schema = "cnts array<long>"
+    def step(key, st, rows, eos_seen):
+        # a null item has a null index and counts nowhere
+        cnts = np.asarray(st[0], dtype=np.int64) + np.bincount(
+            rows["idx"].dropna().to_numpy(dtype=np.int64), minlength=width
+        )
+        if eos_seen:  # constant-state op: no empty entry after EOS
+            return [(key[0], i, int(c)) for i, c in enumerate(cnts) if c > 0], None
+        return [], (cnts.tolist(),)
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            (cnts,) = state.get
-            cnts = list(cnts)
-        else:
-            cnts = [0] * width
-        eos = False
-        for pdf in pdfs:
-            live = pdf.loc[~pdf["_eos"], "idx"]
-            for i, c in live.value_counts().items():
-                cnts[int(i)] += int(c)
-            eos = eos or bool(pdf["_eos"].any())
-        if eos:
-            state.remove()  # constant-state op: no empty entry after EOS
-            nz = [(key[0], i, c) for i, c in enumerate(cnts) if c > 0]
-            yield pd.DataFrame(nz, columns=["r", "idx", "counter"]) if nz else (
-                pd.DataFrame({"r": [], "idx": [], "counter": []})
-            )
-        else:
-            state.update((cnts,))
-            yield pd.DataFrame({"r": [], "idx": [], "counter": []})
-
-    return d.groupBy("r").applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        d, ["r"], "r int, idx long, counter long", "cnts array<long>",
+        ([0] * width,), step, eos_col="_eos",
     )
 
 
@@ -1141,31 +1065,24 @@ def streaming_funnel(
     Output: one append row per conversion (user, stage_idx, stage,
     conv_us).
     """
-    out_schema = f"{user_col} long, stage_idx long, stage string, conv_us long"
-    state_schema = "reached long, t_last long"
     stage_list = list(stages)
 
-    def advance(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        reached, t_last = state.get if state.exists else (-1, -1)
+    def step(key, st, rows, eos_seen):
+        reached, t_last = st
         out = []
-        chunks = [pdf for pdf in pdfs]
-        pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-        pdf = pdf.sort_values(us_col)
-        for ty, us in zip(pdf[type_col], pdf[us_col]):
+        for ty, us in zip(rows[type_col], rows[us_col]):
             nxt = reached + 1
             if nxt >= len(stage_list):
                 break
             if ty == stage_list[nxt] and (reached < 0 or us > t_last):
                 reached, t_last = nxt, int(us)
                 out.append((key[0], nxt, stage_list[nxt], int(us)))
-        state.update((reached, t_last))
-        cols = [user_col, "stage_idx", "stage", "conv_us"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+        return out, (reached, t_last)
 
-    return df.select(user_col, type_col, us_col).groupBy(user_col).applyInPandasWithState(
-        advance, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        df.select(user_col, type_col, us_col), [user_col],
+        f"{user_col} long, stage_idx long, stage string, conv_us long",
+        "reached long, t_last long", (-1, -1), step, order_cols=[us_col],
     )
 
 
@@ -1193,36 +1110,22 @@ def streaming_cohort_retention(
     (exactly the batch form's per-user distinct-bucket footprint; bound it
     with a retention horizon at corpus scale).
     """
-    out_schema = "cohort_bucket long, bucket_offset long"
-    state_schema = "cohort long, seen array<long>"
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            cohort, seen_l = state.get
-            seen = set(seen_l)
-        else:
-            cohort, seen = None, set()
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
+    def step(key, st, rows, eos_seen):
+        cohort, seen = st[0], set(st[1])
         out: list[tuple[int, int]] = []
-        if pdf is not None and len(pdf):
-            for b in sorted(set((pdf[us_col] // bucket_us).astype("int64").tolist())):
-                if cohort is None:
-                    cohort = int(b)
-                off = int(b) - cohort
-                if off >= 0 and off not in seen:
-                    seen.add(off)
-                    out.append((cohort, off))
-        state.update((cohort if cohort is not None else -1, sorted(seen)))
-        cols = ["cohort_bucket", "bucket_offset"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+        for b in sorted(set((rows[us_col] // bucket_us).astype("int64").tolist())):
+            if cohort is None:
+                cohort = b
+            off = b - cohort
+            if off >= 0 and off not in seen:
+                seen.add(off)
+                out.append((cohort, off))
+        return out, (cohort, sorted(seen))
 
-    return df.groupBy(user_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        df, [user_col], "cohort_bucket long, bucket_offset long",
+        "cohort long, seen array<long>", (None, []), step,
     )
 
 
@@ -1248,18 +1151,12 @@ def streaming_trending_counts(
     buckets are dropped. Growth matches the batch form: NULL for the
     key's first bucket, round(cnt/prev, 6) otherwise.
     """
-    key_out = f"{key_col} string"
-    out_schema = f"{key_out}, bucket long, cnt long, prev_cnt long, growth double"
-    state_schema = "cur_b long, cur_c long, last_b long, last_c long"
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            cur_b, cur_c, last_b, last_c = state.get
-        else:
-            cur_b, cur_c, last_b, last_c = -1, 0, -1, -1
+    def step(key, st, rows, eos_seen):
+        cur_b, cur_c, last_b, last_c = st
         out: list[tuple] = []
 
-        def close(b_next: int | None) -> None:
+        def close() -> None:
             nonlocal cur_b, cur_c, last_b, last_c
             if cur_b < 0:
                 return
@@ -1269,38 +1166,24 @@ def streaming_trending_counts(
             last_b, last_c = cur_b, cur_c
             cur_b, cur_c = -1, 0
 
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
-        eos_seen = False
-        if pdf is not None and len(pdf):
-            if eos_col is not None:
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                pdf = pdf.loc[~flags]
-            for b, c in (
-                (pdf[us_col] // bucket_us).value_counts().sort_index().items()
-            ):
-                b, c = int(b), int(c)
-                if b == cur_b:
-                    cur_c += c
-                elif b > cur_b:
-                    close(b)
-                    cur_b, cur_c = b, c
-                # b < cur_b: late row for an emitted bucket — dropped
+        for b, c in (rows[us_col] // bucket_us).value_counts().sort_index().items():
+            b, c = int(b), int(c)
+            if b == cur_b:
+                cur_c += c
+            elif b > cur_b:
+                close()
+                cur_b, cur_c = b, c
+            # b < cur_b: late row for an emitted bucket — dropped
         if eos_seen:
-            close(None)
-            state.remove()
-        else:
-            state.update((cur_b, cur_c, last_b, last_c))
-        cols = [key_col, "bucket", "cnt", "prev_cnt", "growth"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+            close()
+            return out, None
+        return out, (cur_b, cur_c, last_b, last_c)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        df, [key_col],
+        f"{key_col} string, bucket long, cnt long, prev_cnt long, growth double",
+        "cur_b long, cur_c long, last_b long, last_c long", (-1, 0, -1, -1), step,
+        eos_col=eos_col,
     )
 
 
@@ -1329,15 +1212,10 @@ def streaming_ewma(
     matching the batch fold). Values match the batch form bit-for-bit:
     python floats are IEEE doubles running the identical sequence.
     """
-    out_schema = f"{key_col} string, bucket long, cnt long, ewma double"
-    state_schema = "cur_b long, cur_c long, prev_e double, has_prev boolean"
     a, b1 = float(alpha), 1.0 - float(alpha)
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            cur_b, cur_c, prev_e, has_prev = state.get
-        else:
-            cur_b, cur_c, prev_e, has_prev = -1, 0, 0.0, False
+    def step(key, st, rows, eos_seen):
+        cur_b, cur_c, prev_e, has_prev = st
         out: list[tuple] = []
 
         def close() -> None:
@@ -1349,38 +1227,23 @@ def streaming_ewma(
             prev_e, has_prev = e, True
             cur_b, cur_c = -1, 0
 
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
-        eos_seen = False
-        if pdf is not None and len(pdf):
-            if eos_col is not None:
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                pdf = pdf.loc[~flags]
-            for b, c in (
-                (pdf[us_col] // bucket_us).value_counts().sort_index().items()
-            ):
-                b, c = int(b), int(c)
-                if b == cur_b:
-                    cur_c += c
-                elif b > cur_b:
-                    close()
-                    cur_b, cur_c = b, c
-                # b < cur_b: late row for an emitted bucket — dropped
+        for b, c in (rows[us_col] // bucket_us).value_counts().sort_index().items():
+            b, c = int(b), int(c)
+            if b == cur_b:
+                cur_c += c
+            elif b > cur_b:
+                close()
+                cur_b, cur_c = b, c
+            # b < cur_b: late row for an emitted bucket — dropped
         if eos_seen:
             close()
-            state.remove()
-        else:
-            state.update((cur_b, cur_c, prev_e, has_prev))
-        cols = [key_col, "bucket", "cnt", "ewma"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+            return out, None
+        return out, (cur_b, cur_c, prev_e, has_prev)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        df, [key_col], f"{key_col} string, bucket long, cnt long, ewma double",
+        "cur_b long, cur_c long, prev_e double, has_prev boolean",
+        (-1, 0, 0.0, False), step, eos_col=eos_col,
     )
 
 
@@ -1420,11 +1283,8 @@ def streaming_holt(
     a, a1 = float(alpha), 1.0 - float(alpha)
     b, b1 = float(beta), 1.0 - float(beta)
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            cur_b, cur_c, prev_l, prev_t, has_prev = state.get
-        else:
-            cur_b, cur_c, prev_l, prev_t, has_prev = -1, 0, 0.0, 0.0, False
+    def step(key, st, rows, eos_seen):
+        cur_b, cur_c, prev_l, prev_t, has_prev = st
         out: list[tuple] = []
 
         def close() -> None:
@@ -1449,38 +1309,22 @@ def streaming_holt(
             prev_l, prev_t, has_prev = new_l, new_t, True
             cur_b, cur_c = -1, 0
 
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
-        eos_seen = False
-        if pdf is not None and len(pdf):
-            if eos_col is not None:
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                pdf = pdf.loc[~flags]
-            for bk, c in (
-                (pdf[us_col] // bucket_us).value_counts().sort_index().items()
-            ):
-                bk, c = int(bk), int(c)
-                if bk == cur_b:
-                    cur_c += c
-                elif bk > cur_b:
-                    close()
-                    cur_b, cur_c = bk, c
-                # bk < cur_b: late row for an emitted bucket — dropped
+        for bk, c in (rows[us_col] // bucket_us).value_counts().sort_index().items():
+            bk, c = int(bk), int(c)
+            if bk == cur_b:
+                cur_c += c
+            elif bk > cur_b:
+                close()
+                cur_b, cur_c = bk, c
+            # bk < cur_b: late row for an emitted bucket — dropped
         if eos_seen:
             close()
-            state.remove()
-        else:
-            state.update((cur_b, cur_c, prev_l, prev_t, has_prev))
-        cols = [key_col, "bucket", "cnt", "level", "trend", "forecast_next"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+            return out, None
+        return out, (cur_b, cur_c, prev_l, prev_t, has_prev)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        df, [key_col], out_schema, state_schema, (-1, 0, 0.0, 0.0, False), step,
+        eos_col=eos_col,
     )
 
 
@@ -1514,11 +1358,8 @@ def streaming_ohlc(
         "c_us long, c_v double, cnt long"
     )
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            bkt, o_us, o_v, hi, lo, c_us, c_v, cnt = state.get
-        else:
-            bkt, o_us, o_v, hi, lo, c_us, c_v, cnt = -1, 0, 0.0, 0.0, 0.0, 0, 0.0, 0
+    def step(key, st, rows, eos_seen):
+        bkt, o_us, o_v, hi, lo, c_us, c_v, cnt = st
         out: list[tuple] = []
 
         def close() -> None:
@@ -1528,47 +1369,32 @@ def streaming_ohlc(
             out.append(key + (bkt * bucket_us, o_v, hi, lo, c_v, cnt))
             bkt, cnt = -1, 0
 
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
-        eos_seen = False
-        if pdf is not None and len(pdf):
-            if eos_col is not None:
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                pdf = pdf.loc[~flags]
-            pdf = pdf.sort_values(us_col)
-            for us, v in zip(
-                pdf[us_col].to_numpy(dtype="int64"),
-                pdf[value_col].to_numpy(dtype="float64"),
-            ):
-                us, v, b = int(us), float(v), int(us) // bucket_us
-                if b < bkt:
-                    continue  # late row for an emitted bar — dropped
-                if b != bkt:
-                    close()
-                    bkt = b
-                    o_us, o_v, hi, lo, c_us, c_v, cnt = us, v, v, v, us, v, 1
-                    continue
-                cnt += 1
-                if (us, v) < (o_us, o_v):
-                    o_us, o_v = us, v
-                if (us, v) > (c_us, c_v):
-                    c_us, c_v = us, v
-                hi, lo = max(hi, v), min(lo, v)
+        for us, v in zip(
+            rows[us_col].to_numpy(dtype="int64"),
+            rows[value_col].to_numpy(dtype="float64"),
+        ):
+            us, v, b = int(us), float(v), int(us) // bucket_us
+            if b < bkt:
+                continue  # late row for an emitted bar — dropped
+            if b != bkt:
+                close()
+                bkt = b
+                o_us, o_v, hi, lo, c_us, c_v, cnt = us, v, v, v, us, v, 1
+                continue
+            cnt += 1
+            if (us, v) < (o_us, o_v):
+                o_us, o_v = us, v
+            if (us, v) > (c_us, c_v):
+                c_us, c_v = us, v
+            hi, lo = max(hi, v), min(lo, v)
         if eos_seen:
             close()
-            state.remove()
-        else:
-            state.update((bkt, o_us, o_v, hi, lo, c_us, c_v, cnt))
-        cols = [key_col, "bucket", "open", "high", "low", "close", "cnt"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+            return out, None
+        return out, (bkt, o_us, o_v, hi, lo, c_us, c_v, cnt)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        df, [key_col], out_schema, state_schema,
+        (-1, 0, 0.0, 0.0, 0.0, 0, 0.0, 0), step, order_cols=[us_col], eos_col=eos_col,
     )
 
 
@@ -1599,51 +1425,30 @@ def streaming_scd2(
         f"{key_col} string, {attr_col} string, valid_from long, "
         "valid_to long, version_seq long, is_current boolean"
     )
-    state_schema = "attr string, attr_null boolean, vfrom long, ver long"
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            attr, attr_null, vfrom, ver = state.get
-        else:
-            attr, attr_null, vfrom, ver = None, True, -1, 0
+    def step(key, st, rows, eos_seen):
+        attr, attr_null, vfrom, ver = st
         has_open = ver > 0
         out: list[tuple] = []
-
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
-        eos_seen = False
-        if pdf is not None and len(pdf):
-            if eos_col is not None:
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                pdf = pdf.loc[~flags]
-            pdf = pdf.sort_values(us_col, kind="stable")
-            for us, a in zip(pdf[us_col].to_numpy(dtype="int64"), pdf[attr_col]):
-                us = int(us)
-                a = None if pd.isna(a) else str(a)
-                a_null = a is None
-                if has_open and a_null == attr_null and a == attr:
-                    continue  # unchanged: stays in the open version
-                if has_open:
-                    out.append(key + (attr, vfrom, us, ver, False))
-                attr, attr_null, vfrom, ver = a, a_null, us, ver + 1
-                has_open = True
+        for us, a in zip(rows[us_col].to_numpy(dtype="int64"), rows[attr_col]):
+            us = int(us)
+            a = None if pd.isna(a) else str(a)
+            a_null = a is None
+            if has_open and a_null == attr_null and a == attr:
+                continue  # unchanged: stays in the open version
+            if has_open:
+                out.append(key + (attr, vfrom, us, ver, False))
+            attr, attr_null, vfrom, ver = a, a_null, us, ver + 1
+            has_open = True
         if eos_seen:
             if has_open:
                 out.append(key + (attr, vfrom, None, ver, True))
-            state.remove()
-        else:
-            state.update((attr, attr_null, vfrom, ver))
-        cols = [key_col, attr_col, "valid_from", "valid_to", "version_seq",
-                "is_current"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+            return out, None
+        return out, (attr, attr_null, vfrom, ver)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        df, [key_col], out_schema, "attr string, attr_null boolean, vfrom long, ver long",
+        (None, True, -1, 0), step, order_cols=[us_col], eos_col=eos_col,
     )
 
 
@@ -1666,43 +1471,21 @@ def streaming_transitions(
     Contract: per-key non-decreasing event time across micro-batches;
     within a batch rows sort by (us, type) so equal-timestamp ordering is
     deterministic."""
-    out_schema = f"{key_col} string, from_type string, to_type string"
-    state_schema = "last_ty string, last_us long"
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            last_ty, last_us = state.get
-        else:
-            last_ty, last_us = None, -1
+    def step(key, st, rows, eos_seen):
+        last_ty, last_us = st
         out: list[tuple] = []
+        for us, ty in zip(rows[us_col].to_numpy(dtype="int64"), rows[type_col]):
+            us, ty = int(us), str(ty)
+            if last_ty is not None:
+                out.append(key + (last_ty, ty))
+            last_ty, last_us = ty, us
+        return out, None if eos_seen else (last_ty, last_us)
 
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
-        eos_seen = False
-        if pdf is not None and len(pdf):
-            if eos_col is not None:
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                pdf = pdf.loc[~flags]
-            pdf = pdf.sort_values([us_col, type_col], kind="stable")
-            for us, ty in zip(pdf[us_col].to_numpy(dtype="int64"), pdf[type_col]):
-                us, ty = int(us), str(ty)
-                if last_ty is not None:
-                    out.append(key + (last_ty, ty))
-                last_ty, last_us = ty, us
-        if eos_seen:
-            state.remove()
-        else:
-            state.update((last_ty, last_us))
-        cols = [key_col, "from_type", "to_type"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        df, [key_col], f"{key_col} string, from_type string, to_type string",
+        "last_ty string, last_us long", (None, -1), step,
+        order_cols=[us_col, type_col], eos_col=eos_col,
     )
 
 
@@ -1733,45 +1516,23 @@ def streaming_forward_fill(
         f"{key_col} long, {id_col} long, {type_col} string, "
         "last_fill_value double"
     )
-    state_schema = "last_val double, has_val boolean"
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            last_val, has_val = state.get
-        else:
-            last_val, has_val = 0.0, False
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
+    def step(key, st, rows, eos_seen):
+        last_val, has_val = st
         out: list[tuple] = []
-        eos_seen = False
-        if pdf is not None and len(pdf):
-            if eos_col is not None:
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                pdf = pdf.loc[~flags]
-            pdf = pdf.sort_values([us_col, id_col], kind="stable")
-            for rid, ty, val in zip(
-                pdf[id_col].to_numpy(dtype="int64"),
-                pdf[type_col],
-                pdf[value_col].to_numpy(dtype="float64"),
-            ):
-                if str(ty) == fill_type:
-                    last_val, has_val = float(val), True
-                out.append(key + (int(rid), str(ty),
-                                  last_val if has_val else None))
-        if eos_seen:
-            state.remove()
-        else:
-            state.update((last_val, has_val))
-        cols = [key_col, id_col, type_col, "last_fill_value"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+        for rid, ty, val in zip(
+            rows[id_col].to_numpy(dtype="int64"),
+            rows[type_col],
+            rows[value_col].to_numpy(dtype="float64"),
+        ):
+            if str(ty) == fill_type:
+                last_val, has_val = float(val), True
+            out.append(key + (int(rid), str(ty), last_val if has_val else None))
+        return out, None if eos_seen else (last_val, has_val)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        df, [key_col], out_schema, "last_val double, has_val boolean", (0.0, False),
+        step, order_cols=[us_col, id_col], eos_col=eos_col,
     )
 
 
@@ -1798,57 +1559,30 @@ def streaming_weighted_sample(
     wf/basic.hpp EOS semantics; sampling itself is a Spark-first
     extension (the training-mix primitive).
     """
-    out_schema = (
-        f"{key_col} string, {id_col} long, {weight_col} long, rk long"
-    )
-    state_schema = "arr array<double>, ids array<long>, ws array<long>"
 
-    def fold(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        best: list[tuple] = []
-        if state.exists:
-            arr, ids, ws = state.get
-            best = list(zip(arr, ids, ws))
-        eos_seen = False
-        for pdf in pdfs:
-            if eos_col is not None:
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = eos_seen or bool(flags.any())
-                pdf = pdf[~flags]
+    def step(key, st, rows, eos_seen):
+        best = list(zip(*st)) + [
+            (float(a), int(i), int(w))
             for a, i, w in zip(
-                pdf[arrival_col].tolist(),
-                pdf[id_col].tolist(),
-                pdf[weight_col].tolist(),
-            ):
-                best.append((float(a), int(i), int(w)))
+                rows[arrival_col].tolist(),
+                rows[id_col].tolist(),
+                rows[weight_col].tolist(),
+            )
+        ]
         # k smallest by (arrival, id) — the batch window's exact ordering
-        best.sort(key=lambda t: (t[0], t[1]))
-        best = best[:k]
-        if eos_seen:
-            state.remove()  # constant-state op: no entry after EOS
-            out = pd.DataFrame(
-                [
-                    (key[0], i, w, rk + 1)
-                    for rk, (_, i, w) in enumerate(best)
-                ],
-                columns=[key_col, id_col, weight_col, "rk"],
-            )
-            yield out
-        else:
-            state.update(
-                (
-                    [a for a, _, _ in best],
-                    [i for _, i, _ in best],
-                    [w for _, _, w in best],
-                )
-            )
-            yield pd.DataFrame(
-                {c: [] for c in [key_col, id_col, weight_col, "rk"]}
-            )
+        best = sorted(best, key=lambda t: (t[0], t[1]))[:k]
+        if eos_seen:  # constant-state op: no entry after EOS
+            return [(key[0], i, w, rk + 1) for rk, (_, i, w) in enumerate(best)], None
+        return [], (
+            [a for a, _, _ in best],
+            [i for _, i, _ in best],
+            [w for _, _, w in best],
+        )
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        df, [key_col], f"{key_col} string, {id_col} long, {weight_col} long, rk long",
+        "arr array<double>, ids array<long>, ws array<long>", ([], [], []), step,
+        eos_col=eos_col,
     )
 
 
@@ -1883,15 +1617,9 @@ def streaming_alert_hysteresis(
         f"{key_col} string, bucket long, cnt long, alert boolean, "
         "is_start boolean"
     )
-    state_schema = "cur_b long, cur_c long, prev long"
 
-    def fold(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            cur_b, cur_c, prev = state.get
-        else:
-            cur_b, cur_c, prev = -1, 0, -1  # prev -1 = no emitted bucket yet
+    def step(key, st, rows, eos_seen):
+        cur_b, cur_c, prev = st  # prev -1 = no emitted bucket yet
         out: list[tuple] = []
 
         def close() -> None:
@@ -1904,50 +1632,26 @@ def streaming_alert_hysteresis(
                 alert = False
             else:
                 alert = prev == 1
-            out.append(
-                key
-                + (
-                    cur_b * bucket_us,
-                    cur_c,
-                    alert,
-                    alert and prev != 1,
-                )
-            )
+            out.append(key + (cur_b * bucket_us, cur_c, alert, alert and prev != 1))
             prev = 1 if alert else 0
             cur_b, cur_c = -1, 0
 
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
-        eos_seen = False
-        if pdf is not None and len(pdf):
-            if eos_col is not None:
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                pdf = pdf.loc[~flags]
-            for b, c in (
-                (pdf[us_col] // bucket_us).value_counts().sort_index().items()
-            ):
-                b, c = int(b), int(c)
-                if b == cur_b:
-                    cur_c += c
-                elif b > cur_b:
-                    close()
-                    cur_b, cur_c = b, c
-                # b < cur_b: late row for an emitted bucket — dropped
+        for b, c in (rows[us_col] // bucket_us).value_counts().sort_index().items():
+            b, c = int(b), int(c)
+            if b == cur_b:
+                cur_c += c
+            elif b > cur_b:
+                close()
+                cur_b, cur_c = b, c
+            # b < cur_b: late row for an emitted bucket — dropped
         if eos_seen:
             close()
-            state.remove()  # constant-state op: no entry after EOS
-        else:
-            state.update((cur_b, cur_c, prev))
-        cols = [key_col, "bucket", "cnt", "alert", "is_start"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+            return out, None  # constant-state op: no entry after EOS
+        return out, (cur_b, cur_c, prev)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        df, [key_col], out_schema, "cur_b long, cur_c long, prev long", (-1, 0, -1),
+        step, eos_col=eos_col,
     )
 
 
@@ -1970,42 +1674,67 @@ def streaming_debounce(
     Contract: per-key non-decreasing event time across micro-batches (the
     streaming_trending_counts in-order model)."""
     key_schema = ", ".join(f"{k} string" for k in key_cols)
-    out_schema = f"{key_schema}, us long"
-    state_schema = "last_us long"
 
-    def fold(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        last = state.get[0] if state.exists else None
-        if last is not None and last < 0:
-            last = None  # -1 sentinel = no raw event seen yet
+    def step(key, st, rows, eos_seen):
+        last = st[0] if st[0] >= 0 else None  # -1 = no raw event seen yet
         out: list[tuple] = []
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
-        eos_seen = False
-        if pdf is not None and len(pdf):
-            if eos_col is not None:
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                pdf = pdf.loc[~flags]
-            for u in sorted(int(x) for x in pdf[us_col].tolist()):
-                if last is None or u - last > gap_us:
-                    out.append(key + (u,))
-                last = u
+        for u in map(int, rows[us_col].tolist()):
+            if last is None or u - last > gap_us:
+                out.append(key + (u,))
+            last = u
         if eos_seen:
-            state.remove()  # constant-state op: no entry after EOS
-        else:
-            state.update((last if last is not None else -1,))
-        cols = [*key_cols, "us"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+            return out, None  # constant-state op: no entry after EOS
+        return out, (last if last is not None else -1,)
 
-    return df.groupBy(*key_cols).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        df, key_cols, f"{key_schema}, us long", "last_us long", (-1,), step,
+        order_cols=[us_col], eos_col=eos_col,
     )
+
+
+def _asof_buffer(st: tuple, rows: pd.DataFrame) -> tuple:
+    """Append one micro-batch of side-tagged as-of rows to the per-key
+    buffer state (a_ids, a_us, b_ids, b_us, b_vals, a_done, b_done); an
+    ``eos`` row marks its side done."""
+    a_ids, a_uss, b_ids, b_uss, b_vals, a_done, b_done = st
+    eos = rows["eos"].fillna(False).to_numpy(dtype=bool)
+    is_a = rows["side"].to_numpy() == 0
+    a_rows, b_rows = rows[is_a & ~eos], rows[~is_a & ~eos]
+    return (
+        list(a_ids) + a_rows["id"].astype("int64").tolist(),
+        list(a_uss) + a_rows["us"].astype("int64").tolist(),
+        list(b_ids) + b_rows["id"].astype("int64").tolist(),
+        list(b_uss) + b_rows["us"].astype("int64").tolist(),
+        list(b_vals) + b_rows["val"].astype("float64").tolist(),
+        bool(a_done or (eos & is_a).any()),
+        bool(b_done or (eos & ~is_a).any()),
+    )
+
+
+def _asof_match(k, a_pairs, b_ids, b_uss, b_vals, lookback_us=None) -> list[tuple]:
+    """(k, a_id, a_us, b_id, b_val) per (a_id, a_us): the latest b at or
+    before a_us (and within ``lookback_us`` when given), equal-b_us ties
+    resolved to the greatest (id, val) — the batch struct tie-break; null
+    b columns when none qualifies."""
+    order = sorted(range(len(b_ids)), key=lambda i: (b_uss[i], b_ids[i], b_vals[i]))
+    s_us = [b_uss[i] for i in order]
+    out = []
+    for aid, aus in a_pairs:
+        j = bisect.bisect_right(s_us, aus) - 1
+        if j >= 0 and (lookback_us is None or s_us[j] >= aus - lookback_us):
+            bi = order[j]
+            out.append((k, aid, aus, b_ids[bi], b_vals[bi]))
+        else:
+            out.append((k, aid, aus, None, None))
+    return out
+
+
+_ASOF_OUT = "k long, a_id long, a_us long, b_id long, b_val double"
+_ASOF_STATE = (
+    "a_ids array<long>, a_us array<long>, b_ids array<long>, "
+    "b_us array<long>, b_vals array<double>, a_done boolean, b_done boolean"
+)
+_ASOF_INITIAL = ([], [], [], [], [], False, False)
 
 
 def streaming_asof_join_backward(
@@ -2060,62 +1789,15 @@ def streaming_asof_join_backward(
     )
     u = a_side.unionByName(b_side)
 
-    out_schema = "k long, a_id long, a_us long, b_id long, b_val double"
-    state_schema = (
-        "a_ids array<long>, a_us array<long>, b_ids array<long>, "
-        "b_us array<long>, b_vals array<double>, a_done boolean, b_done boolean"
-    )
+    def step(key, st, rows, eos_seen):
+        # the punctuations are per SIDE, so they stay in ``rows``
+        st = _asof_buffer(st, rows)
+        a_ids, a_uss, b_ids, b_uss, b_vals, a_done, b_done = st
+        if not (a_done and b_done):
+            return [], st
+        return _asof_match(key[0], zip(a_ids, a_uss), b_ids, b_uss, b_vals), None
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            a_ids, a_uss, b_ids, b_uss, b_vals, a_done, b_done = state.get
-            a_ids, a_uss = list(a_ids), list(a_uss)
-            b_ids, b_uss, b_vals = list(b_ids), list(b_uss), list(b_vals)
-        else:
-            a_ids, a_uss, b_ids, b_uss, b_vals = [], [], [], [], []
-            a_done = b_done = False
-        for pdf in pdfs:
-            for r in pdf.itertuples(index=False):
-                if bool(r.eos):
-                    if r.side == 0:
-                        a_done = True
-                    else:
-                        b_done = True
-                elif r.side == 0:
-                    a_ids.append(int(r.id))
-                    a_uss.append(int(r.us))
-                else:
-                    b_ids.append(int(r.id))
-                    b_uss.append(int(r.us))
-                    b_vals.append(float(r.val))
-        cols = ["k", "a_id", "a_us", "b_id", "b_val"]
-        if a_done and b_done:
-            # flush: sort b once by (us, id, val) so "last at-or-before"
-            # lands on the greatest payload among equal timestamps —
-            # the batch form's struct tie-break
-            order = sorted(range(len(b_ids)), key=lambda i: (b_uss[i], b_ids[i], b_vals[i]))
-            s_us = [b_uss[i] for i in order]
-            rows = []
-            import bisect
-
-            for aid, aus in zip(a_ids, a_uss):
-                j = bisect.bisect_right(s_us, aus) - 1
-                if j >= 0:
-                    i = order[j]
-                    rows.append((key[0], aid, aus, b_ids[i], b_vals[i]))
-                else:
-                    rows.append((key[0], aid, aus, None, None))
-            state.remove()
-            yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
-                {c: [] for c in cols}
-            )
-        else:
-            state.update((a_ids, a_uss, b_ids, b_uss, b_vals, a_done, b_done))
-            yield pd.DataFrame({c: [] for c in cols})
-
-    return u.groupBy("k").applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return _keyed_fold(u, ["k"], _ASOF_OUT, _ASOF_STATE, _ASOF_INITIAL, step)
 
 
 def streaming_asof_join_backward_bounded(
@@ -2181,80 +1863,36 @@ def streaming_asof_join_backward_bounded(
         _side(b, b_us_col, b_id_col, 1, b_val_col)
     )
 
-    out_schema = "k long, a_id long, a_us long, b_id long, b_val double"
-    state_schema = (
-        "a_ids array<long>, a_us array<long>, b_ids array<long>, "
-        "b_us array<long>, b_vals array<double>, a_done boolean, b_done boolean"
-    )
-    cols = ["k", "a_id", "a_us", "b_id", "b_val"]
-
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        import bisect
-
-        if state.exists:
-            a_ids, a_uss, b_ids, b_uss, b_vals, a_done, b_done = state.get
-            a_ids, a_uss = list(a_ids), list(a_uss)
-            b_ids, b_uss, b_vals = list(b_ids), list(b_uss), list(b_vals)
-        else:
-            a_ids, a_uss, b_ids, b_uss, b_vals = [], [], [], [], []
-            a_done = b_done = False
-        for pdf in pdfs:
-            for r in pdf.itertuples(index=False):
-                if bool(r.eos):
-                    if r.side == 0:
-                        a_done = True
-                    else:
-                        b_done = True
-                elif r.side == 0:
-                    a_ids.append(int(r.id))
-                    a_uss.append(int(r.us))
-                else:
-                    b_ids.append(int(r.id))
-                    b_uss.append(int(r.us))
-                    b_vals.append(float(r.val))
-
-        wm_us = state.getCurrentWatermarkMs() * 1000
+    def step(key, st, rows, eos_seen, wm_us):
+        a_ids, a_uss, b_ids, b_uss, b_vals, a_done, b_done = _asof_buffer(st, rows)
         flush_all = a_done and b_done
         # finalize: a rows strictly below the watermark (all their b
         # candidates have arrived), or everything on EOS drain
-        ready = [
-            i for i, aus in enumerate(a_uss) if flush_all or aus < wm_us
-        ]
-        rows = []
-        if ready:
-            order = sorted(
-                range(len(b_ids)), key=lambda i: (b_uss[i], b_ids[i], b_vals[i])
-            )
-            s_us = [b_uss[i] for i in order]
-            for i in ready:
-                aid, aus = a_ids[i], a_uss[i]
-                j = bisect.bisect_right(s_us, aus) - 1
-                if j >= 0 and s_us[j] >= aus - lookback_us:
-                    bi = order[j]
-                    rows.append((key[0], aid, aus, b_ids[bi], b_vals[bi]))
-                else:
-                    rows.append((key[0], aid, aus, None, None))
+        ready = [i for i, aus in enumerate(a_uss) if flush_all or aus < wm_us]
+        out = _asof_match(
+            key[0], [(a_ids[i], a_uss[i]) for i in ready], b_ids, b_uss, b_vals,
+            lookback_us,
+        ) if ready else []
         if flush_all:
-            state.remove()
-        else:
-            ready_set = set(ready)
-            keep_a = [i for i in range(len(a_ids)) if i not in ready_set]
-            a_ids = [a_ids[i] for i in keep_a]
-            a_uss = [a_uss[i] for i in keep_a]
-            # prune expired quotes: pending and future a rows sit at or
-            # above the watermark, so nothing below wm − lookback matches
-            cutoff = wm_us - lookback_us
-            keep_b = [i for i in range(len(b_ids)) if b_uss[i] >= cutoff]
-            b_ids = [b_ids[i] for i in keep_b]
-            b_uss = [b_uss[i] for i in keep_b]
-            b_vals = [b_vals[i] for i in keep_b]
-            state.update((a_ids, a_uss, b_ids, b_uss, b_vals, a_done, b_done))
-        yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
-            {c: [] for c in cols}
+            return out, None
+        ready_set = set(ready)
+        keep_a = [i for i in range(len(a_ids)) if i not in ready_set]
+        # prune expired quotes: pending and future a rows sit at or
+        # above the watermark, so nothing below wm − lookback matches
+        cutoff = wm_us - lookback_us
+        keep_b = [i for i in range(len(b_ids)) if b_uss[i] >= cutoff]
+        return out, (
+            [a_ids[i] for i in keep_a],
+            [a_uss[i] for i in keep_a],
+            [b_ids[i] for i in keep_b],
+            [b_uss[i] for i in keep_b],
+            [b_vals[i] for i in keep_b],
+            a_done,
+            b_done,
         )
 
-    return u.groupBy("k").applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        u, ["k"], _ASOF_OUT, _ASOF_STATE, _ASOF_INITIAL, step, watermark=True
     )
 
 
@@ -2294,30 +1932,10 @@ def streaming_space_saving(
         F.col(us_col).cast("long").alias("us"),
         F.col(eos_col).cast("boolean").alias("eos"),
     )
-    out_schema = "key string, item string, count_est long, err_bound long, rank long"
-    state_schema = "items array<string>, counts array<long>, errs array<long>"
-    cols = ["key", "item", "count_est", "err_bound", "rank"]
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        items, counts, errs = (
-            ([list(x) for x in state.get]) if state.exists else ([], [], [])
-        )
-        done = False
-        # Concatenate ALL Arrow chunks before the single sort: a micro-batch
-        # larger than arrow.maxRecordsPerBatch arrives as multiple chunks,
-        # and per-chunk sorting would make the fold order depend on the
-        # chunking — the (us, item) order must be a pure function of the
-        # data for exact ordered-replay parity (same fix as the asof fold).
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        batch = (
-            pd.concat(chunks, ignore_index=True).sort_values(["us", "item"])
-            if chunks
-            else pd.DataFrame({"item": [], "eos": []})
-        )
-        for item, is_eos in zip(batch["item"], batch["eos"]):
-            if is_eos:
-                done = True
-                continue
+    def step(key, st, rows, eos_seen):
+        items, counts, errs = (list(x) for x in st)
+        for item in rows["item"]:
             if item in items:
                 counts[items.index(item)] += 1
             elif len(items) < k:
@@ -2328,22 +1946,17 @@ def streaming_space_saving(
                 v = min(range(len(items)), key=lambda i: (counts[i], items[i]))
                 vc = counts[v]
                 items[v], counts[v], errs[v] = item, vc + 1, vc
-        if done:
-            order = sorted(range(len(items)), key=lambda i: (-counts[i], items[i]))
-            rows = [
-                (key[0], items[i], counts[i], errs[i], r + 1)
-                for r, i in enumerate(order)
-            ]
-            state.remove()
-            yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
-                {c: [] for c in cols}
-            )
-        else:
-            state.update((items, counts, errs))
-            yield pd.DataFrame({c: [] for c in cols})
+        if not eos_seen:
+            return [], (items, counts, errs)
+        order = sorted(range(len(items)), key=lambda i: (-counts[i], items[i]))
+        return [
+            (key[0], items[i], counts[i], errs[i], r + 1) for r, i in enumerate(order)
+        ], None
 
-    return sel.groupBy("key").applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        sel, ["key"], "key string, item string, count_est long, err_bound long, rank long",
+        "items array<string>, counts array<long>, errs array<long>", ([], [], []),
+        step, order_cols=["us", "item"], eos_col="eos",
     )
 
 
@@ -2382,50 +1995,30 @@ def streaming_kmv_distinct(
         F.col(item_col).cast("string").alias("item"),
         F.col(eos_col).cast("boolean").alias("eos"),
     )
-    out_schema = "key string, n_kept long, h_k long, kmv_est double"
-    state_schema = "hs array<long>"
-    cols = ["key", "n_kept", "h_k", "kmv_est"]
     m_space = float(16**15)
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        import bisect
+    def step(key, st, rows, eos_seen):
+        hs = list(st[0])
+        for item in rows["item"]:
+            # 15 hex digits = 60 bits, the batch query's hash space
+            hv = int(hashlib.md5(str(item).encode("utf-8")).hexdigest()[:15], 16)
+            if len(hs) == k and hv >= hs[-1]:
+                continue  # cannot enter the k smallest
+            # hs is kept sorted: O(log k) membership + insert
+            i = bisect.bisect_left(hs, hv)
+            if i >= len(hs) or hs[i] != hv:
+                hs.insert(i, hv)
+                del hs[k:]
+        if not eos_seen:
+            return [], (hs,)
+        n_kept = len(hs)
+        h_k = hs[-1] if hs else None
+        est = float(n_kept) if n_kept < k else (k - 1) * m_space / float(h_k)
+        return [(key[0], n_kept, h_k, est)], None
 
-        hs = list(state.get[0]) if state.exists else []
-        done = False
-        for pdf in pdfs:
-            for item, is_eos in zip(pdf["item"], pdf["eos"]):
-                if is_eos:
-                    done = True
-                    continue
-                # 15 hex digits = 60 bits, the batch query's hash space
-                hv = int(
-                    hashlib.md5(str(item).encode("utf-8")).hexdigest()[:15], 16
-                )
-                if len(hs) == k and hv >= hs[-1]:
-                    continue  # cannot enter the k smallest
-                # hs is kept sorted: O(log k) membership + insert
-                i = bisect.bisect_left(hs, hv)
-                if i >= len(hs) or hs[i] != hv:
-                    hs.insert(i, hv)
-                    del hs[k:]
-        if done:
-            n_kept = len(hs)
-            h_k = hs[-1] if hs else None
-            est = (
-                float(n_kept)
-                if n_kept < k
-                else (k - 1) * m_space / float(h_k)
-            )
-            state.remove()
-            yield pd.DataFrame(
-                [(key[0], n_kept, h_k, est)], columns=cols
-            )
-        else:
-            state.update((hs,))
-            yield pd.DataFrame({c: [] for c in cols})
-
-    return sel.groupBy("key").applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        sel, ["key"], "key string, n_kept long, h_k long, kmv_est double",
+        "hs array<long>", ([],), step, eos_col="eos",
     )
 
 
@@ -2467,11 +2060,8 @@ def streaming_page_hinkley(
     )
     dlt, lm = float(delta), float(lam)
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            cur_b, cur_s, cur_c, t, cum_z, ph, min_ph = state.get
-        else:
-            cur_b, cur_s, cur_c, t, cum_z, ph, min_ph = -1, 0.0, 0, 0, 0.0, 0.0, 0.0
+    def step(key, st, rows, eos_seen):
+        cur_b, cur_s, cur_c, t, cum_z, ph, min_ph = st
         out: list[tuple] = []
 
         def close() -> None:
@@ -2488,38 +2078,21 @@ def streaming_page_hinkley(
             out.append(key + (cur_b * bucket_us, z, ph, exc, exc > lm))
             cur_b, cur_s, cur_c = -1, 0.0, 0
 
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
-        eos_seen = False
-        if pdf is not None and len(pdf):
-            if eos_col is not None:
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                pdf = pdf.loc[~flags]
-            pdf = pdf.sort_values(us_col, kind="stable")
-            for us, v in zip(
-                pdf[us_col].to_numpy(), pdf[value_col].to_numpy(dtype=float)
-            ):
-                b = int(us) // bucket_us
-                if b == cur_b:
-                    cur_s += v
-                    cur_c += 1
-                elif b > cur_b:
-                    close()
-                    cur_b, cur_s, cur_c = b, v, 1
-                # b < cur_b: late row for an emitted bucket — dropped
+        for us, v in zip(rows[us_col].to_numpy(), rows[value_col].to_numpy(dtype=float)):
+            b = int(us) // bucket_us
+            if b == cur_b:
+                cur_s += v
+                cur_c += 1
+            elif b > cur_b:
+                close()
+                cur_b, cur_s, cur_c = b, v, 1
+            # b < cur_b: late row for an emitted bucket — dropped
         if eos_seen:
             close()
-            state.remove()
-        else:
-            state.update((cur_b, cur_s, cur_c, t, cum_z, ph, min_ph))
-        cols = [key_col, "bucket", "z", "ph", "excursion", "alert"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+            return out, None
+        return out, (cur_b, cur_s, cur_c, t, cum_z, ph, min_ph)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        df, [key_col], out_schema, state_schema, (-1, 0.0, 0, 0, 0.0, 0.0, 0.0), step,
+        order_cols=[us_col], eos_col=eos_col,
     )

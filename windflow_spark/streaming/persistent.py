@@ -8,8 +8,9 @@ serialize/deserialize wf/persistent/builders_rocksdb.hpp:346-363).
 
 Spark-first mapping: keyed state lives in the streaming STATE STORE, and
 durability is a provider config (rocksdb_state_conf()), not per-operator
-plumbing — `applyInPandasWithState` gives the user callable the same
-(tuple, state) contract, serialized by Arrow instead of user functions.
+plumbing — the keyed fold of streaming/ops.py (``_keyed_fold``, on
+`applyInPandasWithState`) gives the user callable the same (tuple, state)
+contract, serialized by Arrow instead of user functions.
 The per-key LRU/LFU caches of the reference (wf/persistent/cache/*) are
 subsumed by the state store's block cache.
 
@@ -22,14 +23,15 @@ declarative forms in streaming/ops.py.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator, Sequence
+from collections.abc import Callable, Sequence
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-__all__ = ["p_map", "p_filter", "p_flatmap", "p_reduce", "p_reduce_tws"]
+from windflow_spark.streaming.ops import _field_names, _keyed_fold
+
+__all__ = ["p_map", "p_filter", "p_flatmap", "p_reduce"]
 
 
 def _stateful(
@@ -42,23 +44,20 @@ def _stateful(
     per_row: Callable[[dict, list], Any],
     collect: Callable[[dict, Any, list[dict]], None],
 ) -> DataFrame:
-    """Shared driver: per key, rows are folded through ``per_row(row,
-    state)`` in ``order_col`` order (the reference's per-key arrival order);
+    """Per key, rows are folded through ``per_row(row, state)`` in
+    ``order_col`` order (the reference's per-key arrival order);
     ``collect`` decides what each call appends to the output."""
-    key_list = list(key_cols)
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        st = list(state.get) if state.exists else list(init_state)
+    def step(key, st, rows, eos_seen):
+        st = list(st)
         out: list[dict] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(order_col)
-            for row in pdf.to_dict("records"):
-                collect(row, per_row(row, st), out)
-        state.update(tuple(st))
-        yield pd.DataFrame(out) if out else pd.DataFrame()
+        for row in rows.to_dict("records"):
+            collect(row, per_row(row, st), out)
+        return out, st
 
-    return df.groupBy(*key_list).applyInPandasWithState(
-        fold, output_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        df, key_cols, output_schema, state_schema, tuple(init_state), step,
+        order_cols=[order_col],
     )
 
 
@@ -142,23 +141,20 @@ def p_reduce(
     ``func`` may be None when ``vector_fold`` is given.
     """
     key_list = list(key_cols)
-    state_names = [f.split()[0] for f in state_schema.split(",")]
+    state_names = _field_names(state_schema)
 
     if vector_fold is not None:
 
-        def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-            st = tuple(state.get) if state.exists else tuple(init_state)
-            for pdf in pdfs:
-                pdf = pdf.sort_values(order_col)
-                state_vals, st = vector_fold(st, pdf)
-                res = pdf[key_list + [order_col]].reset_index(drop=True)
-                for name in state_names:
-                    res[name] = state_vals[name].reset_index(drop=True)
-                yield res
-            state.update(tuple(st))
+        def step(key, st, rows, eos_seen):
+            state_vals, st = vector_fold(tuple(st), rows)
+            res = rows[key_list + [order_col]].copy()
+            for name in state_names:
+                res[name] = state_vals[name].reset_index(drop=True)
+            return res, st
 
-        return df.groupBy(*key_list).applyInPandasWithState(
-            fold, output_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        return _keyed_fold(
+            df, key_list, output_schema, state_schema, tuple(init_state), step,
+            order_cols=[order_col],
         )
 
     def per_row_and_emit(row: dict, st: list) -> dict:
@@ -171,64 +167,4 @@ def p_reduce(
     return _stateful(
         df, key_cols, order_col, output_schema, state_schema, init_state,
         per_row_and_emit, lambda row, res, out: out.append(res),
-    )
-
-
-def p_reduce_tws(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    order_col: str,
-    func,
-    output_schema: str,
-    state_schema: str,
-    init_state: tuple,
-) -> DataFrame:
-    """P_Reduce on the MODERN state API (transformWithStateInPandas,
-    Spark ≥4.0): same contract as p_reduce — fold ``func(row, state)`` per
-    key in ``order_col`` order, emit the state after every input — but the
-    per-key state is a typed ValueState in the RocksDB state store (this
-    API REQUIRES the RocksDB provider; apply rocksdb_state_conf()).
-    Runtime dependency: the transformWithState driver worker speaks
-    protobuf — environments without ``google.protobuf`` must use the
-    applyInPandasWithState form (p_reduce), which is dependency-free.
-
-    Prefer this form for new code: ValueState/ListState/MapState compose,
-    state has TTL support, and schema evolution is handled by the store —
-    the closest Spark gets to the reference's typed per-key RocksDB state
-    (wf/persistent/p_reduce.hpp:197 + builders_rocksdb.hpp serializers).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    key_list = list(key_cols)
-    state_names = [f.split()[0] for f in state_schema.split(",")]
-
-    class _Fold(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState("fold_state", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            st = list(self._st.get()) if self._st.exists() else list(init_state)
-            out: list[dict] = []
-            for pdf in rows:
-                pdf = pdf.sort_values(order_col)
-                for row in pdf.to_dict("records"):
-                    func(row, st)
-                    rec = {k: row[k] for k in key_list}
-                    rec[order_col] = row[order_col]
-                    rec.update(zip(state_names, st))
-                    out.append(rec)
-            self._st.update(tuple(st))
-            yield pd.DataFrame(out) if out else pd.DataFrame()
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy(*key_list).transformWithStateInPandas(
-        statefulProcessor=_Fold(),
-        outputStructType=output_schema,
-        outputMode="Append",
-        timeMode="None",
     )
